@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory shared by Verify / Bench / tests.
+/** Session factory shared by Verify / RecipeCli / the perfbench harness / tests.
   *
   * local[N] with shuffle partitions matched to cores (never the 200
   * default), AQE on so runtime statistics drive partition coalescing and
@@ -18,10 +18,7 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_AQE=false flips AQE off for A/B job-overhead
-      // experiments; default on (runtime coalesce + skew-join)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // let AQE pick the output partitioning INSIDE cached plans too:

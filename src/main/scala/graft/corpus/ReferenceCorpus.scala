@@ -69,15 +69,13 @@ object ReferenceCorpus {
 
   /** Generates (once) and returns the fixture root for `sfDir`.
     *
-    * `mult` replicates every driving key `mult`× (k -> k*mult+i), which
-    * multiplies fixture LINE counts while keeping the file/recipe layout
-    * — the growth regime of real benchmark-log corpora (logs get longer,
-    * the recipe tree doesn't). Used by [[graft.tools.DagScale]] for
-    * wall-vs-data curves; the oracle suite always runs at mult=1. */
-  def ensure(spark: SparkSession, sfDir: String, mult: Int = 1): String = synchronized {
-    require(mult >= 1)
-    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_") +
-      (if (mult > 1) s"_x$mult" else "")
+    * Fixture LINE counts follow the driving tables' key counts while the
+    * file/recipe layout stays fixed — the growth regime of real
+    * benchmark-log corpora (logs get longer, the recipe tree doesn't);
+    * SCALE.md §2 records the DAG's wall-vs-data curve over key-replicated
+    * copies of this tree. */
+  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+    val tag = new File(sfDir).getName.replaceAll("[^A-Za-z0-9.]", "_")
     // bump the version suffix whenever fixture content changes — the
     // marker below caches the tree across JVMs
     val root = new File(sys.props("java.io.tmpdir"), s"graft_corpus_v9_$tag")
@@ -88,12 +86,9 @@ object ReferenceCorpus {
     def line(path: String, s: String): Unit =
       files.getOrElseUpdate(path, new StringBuilder).append(s).append('\n')
 
-    def keys(table: String, keyCol: String): Array[Long] = {
-      val base = spark.read.parquet(s"$sfDir/$table.parquet")
+    def keys(table: String, keyCol: String): Array[Long] =
+      spark.read.parquet(s"$sfDir/$table.parquet")
         .select(keyCol).collect().map(_.getLong(0))
-      if (mult == 1) base
-      else base.flatMap(k => Array.tabulate(mult)(i => k * mult + i))
-    }
 
     // ---- omnisci server logs (events.event_id) ----
     for (k <- keys("events", "event_id")) {

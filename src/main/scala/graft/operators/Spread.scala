@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
 
 /** Scale-adaptive input spread for CPU-heavy operator entry maps
   * (shingle md5, codec decode, vector math).
@@ -45,12 +46,16 @@ private[graft] object Spread {
   import org.apache.spark.sql.catalyst.plans.logical._
 
   /** True when physically planning `plan` cannot insert an exchange —
-    * i.e. `df.rdd` is pure driver-side planning, never a job. */
+    * i.e. `df.rdd` is pure driver-side planning, never a job. The typed
+    * grouping operators require a clustered distribution (an exchange)
+    * without an Aggregate node, and a subquery's plan is not a child
+    * node, so AQE would run its stages to materialize the outer RDD. */
   private def shuffleFree(plan: LogicalPlan): Boolean = !plan.exists {
     case _: Aggregate | _: Join | _: Window | _: Sort | _: Distinct |
          _: RepartitionOperation | _: GlobalLimit | _: SetOperation |
-         _: Deduplicate => true
-    case _ => false
+         _: Deduplicate | _: MapGroups | _: CoGroup |
+         _: FlatMapGroupsWithState => true
+    case p => p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]]))
   }
 
   def scan(df: DataFrame): DataFrame = {

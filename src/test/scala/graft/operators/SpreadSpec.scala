@@ -62,6 +62,30 @@ class SpreadSpec extends AnyFunSuite {
     }
   }
 
+  /** In the big regime, `df` keeps its layout and deciding so starts no
+    * job (the split-count probe must not run upstream stages). */
+  private def keepsLayoutWithoutJobs(df: org.apache.spark.sql.DataFrame): Unit =
+    inBigEstimateRegime {
+      val (spread, jobs) = TestSpark.jobsDuring(isSpread(df))
+      assert(!spread)
+      assert(jobs === 0L, s"Spread.scan started $jobs job(s)")
+    }
+
+  test("big-estimate plan with a scalar subquery is never probed (no jobs)") {
+    // node-wise shuffle-free, but the subquery's aggregate is an exchange
+    // AQE would run on the driver to materialize the outer RDD
+    keepsLayoutWithoutJobs(spark.sql(
+      "SELECT id FROM range(1000) WHERE id > (SELECT max(id) FROM range(10))"))
+  }
+
+  test("big-estimate plan with groupByKey.mapGroups is never probed (no jobs)") {
+    // MapGroups requires a clustered distribution: planning inserts an
+    // exchange even though no Aggregate node is in the logical plan
+    import spark.implicits._
+    keepsLayoutWithoutJobs(spark.range(1000).as[Long]
+      .groupByKey(_ % 10).mapGroups((k, it) => (k, it.size)).toDF("k", "n"))
+  }
+
   test("spread output fans the parallelism out to every core") {
     val n = Spread.scan(spark.range(1000).toDF("id")).rdd.getNumPartitions
     assert(n === spark.sparkContext.defaultParallelism)
